@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** The listener bus delivers events asynchronously; the benchmark waits for
+  * it to drain before it reads what its listener collected. The bus is
+  * package-private to Spark, hence this one-line bridge. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(120000L)
+}
