@@ -147,8 +147,8 @@ object CorpusMain {
     val stage = new StageStore(spark, s"$outDir/stages", failAt,
       fingerprint = s"n=$nDocs;salt=$saltTarget")
 
-    // 1. extraction (native extract_spans — span-for-span equal to the
-    //    typed engine, SpanEqualitySpec). The span table commits ONCE:
+    // 1. extraction (extract_spans — span-for-span equal to the oracle,
+    //    SpanEqualitySpec). The span table commits ONCE:
     //    extraction is the expensive pass, and both the text funnel and
     //    the multimodal side output below read the committed table
     //    instead of re-running it

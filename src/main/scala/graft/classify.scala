@@ -1,185 +1,22 @@
 package graft
 
-import java.util.regex.Matcher
-import scala.collection.mutable.ArrayBuffer
-
-/** Boilerplate classifier + media-fragment linker (SURVEY.md §2C).
+/** Classifier spec constants shared by the extraction engine
+  * ([[plans.ExtractExpression]]), the [[ReferenceOracle]] and the DuckDB
+  * replays in [[Queries]] (SURVEY.md §2C).
   *
-  * Generalizes qetch's per-site `handle_*` extractors
+  * The classifier generalizes qetch's per-site `handle_*` extractors
   * (qetch/extractors/gfycat.py::GfycatExtractor.handle_basic,
   * fourchan.py::FourChanExtractor.handle_thread — 1 document → N ordered
-  * content records) into a DOM-heuristic main-content pass: tag-density /
-  * text-density style scoring decides keep/drop per span, media spans are
-  * resolved to their canonical best-quality variant, and output offsets are
-  * renumbered dense 0..n-1 preserving input order.
-  *
-  * DETERMINISM CONTRACT (SURVEY.md §7.5-1): all scoring is integer
-  * arithmetic; iteration order is the input span order (sorted by offset);
-  * no floating point enters any keep/drop decision. The only Double produced
-  * is the final confidence, computed as an exact ratio of two Ints.
+  * content records) into a DOM-heuristic main-content pass: text-density
+  * rules decide keep/drop per span, media spans resolve to their canonical
+  * best-quality variant, and output offsets are renumbered dense 0..n-1
+  * preserving input order. All keep/drop decisions are integer arithmetic
+  * (SURVEY.md §7.5-1).
   */
 object Classify {
-
-  /** Input-kind vocabulary (FIXTURES.md §1). */
-  val BoilerplateKinds: Set[String] = Set("nav", "ad", "footer")
 
   /** Small fixed stopword list — the text-density signal. */
   val Stopwords: Set[String] = Set(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "on", "for", "with", "as", "at", "by", "from", "this", "that", "be")
-
-  /** Integer text-density score of a span's text:
-    * 4 per word + 3 per stopword − 2 per punctuation char. */
-  def textScore(text: String): Int = {
-    var words = 0; var stops = 0; var punct = 0
-    var i = 0; val n = text.length
-    var wordStart = -1
-    def closeWord(end: Int): Unit = if (wordStart >= 0) {
-      words += 1
-      // lowercase compare without allocation-heavy normalization: the
-      // generator emits lowercase words; compare as-is.
-      if (Stopwords.contains(text.substring(wordStart, end))) stops += 1
-      wordStart = -1
-    }
-    while (i < n) {
-      val c = text.charAt(i)
-      if (c == ' ') closeWord(i)
-      else {
-        if (!Character.isLetterOrDigit(c)) punct += 1
-        if (wordStart < 0) wordStart = i
-      }
-      i += 1
-    }
-    closeWord(n)
-    4 * words + 3 * stops - 2 * punct
-  }
-
-  def wordCount(text: String): Int =
-    if (text.isEmpty) 0 else text.split(" ").count(_.nonEmpty)
-
-  /** Keep decision for a `text` span. Main-content heuristic: long enough,
-    * or medium-length with stopword evidence, or adjacent to a title
-    * (headline-continuation rule — the one contextual/DOM-ish signal). */
-  def keepText(text: String, adjacentToTitle: Boolean): Boolean = {
-    val words = wordCount(text)
-    val stops = if (text.isEmpty) 0 else text.split(" ").count(w => Stopwords.contains(w))
-    words >= 5 || (words >= 3 && stops >= 1) || (adjacentToTitle && words >= 2)
-  }
-
-  /** Keep decision for a `link` span: only long anchor text survives
-    * (link-density heuristic — navigation chrome has short anchors). */
-  def keepLink(text: String): Boolean = wordCount(text) >= 8
-
-  /** Extract one document. The single source of truth for extraction
-    * semantics; [[ReferenceOracle]] re-implements the same spec
-    * independently for golden comparison (SURVEY.md §5.1). */
-  def extractDoc(doc: RawDoc, registry: CompiledRegistry): ExtractedDoc = {
-    // input order is data-borne: sort by offset (stable; offsets unique).
-    // Null text/media_ref (possible in foreign parquet) normalize to "" so
-    // the typed path agrees with the native expression, which reads nulls
-    // as empty UTF8Strings.
-    val spans = doc.spans.iterator
-      .map(s => if (s.text == null || s.media_ref == null)
-        s.copy(text = Option(s.text).getOrElse(""),
-          media_ref = Option(s.media_ref).getOrElse("")) else s)
-      .toArray.sortBy(_.offset).toSeq
-    val n = spans.length
-
-    // ---- dispatch (qetch get_extractor): REGISTRY-order first match — the
-    // first rule in registration order that matches ANY media ref of the doc
-    // wins (rule priority beats doc position, exactly qetch's ordered
-    // first-match over registered extractor classes). Fall back
-    // generic/textonly.
-    var hasMedia = false
-    var bestRuleIdx = Int.MaxValue
-    var di = 0
-    while (di < n && bestRuleIdx > 0) {
-      val s = spans(di)
-      if (s.kind == "media" && s.media_ref.nonEmpty) {
-        hasMedia = true
-        registry.dispatch(s.media_ref) match {
-          case Some((rule, _)) =>
-            val idx = registry.indexOf(rule)
-            if (idx < bestRuleIdx) bestRuleIdx = idx
-          case None => // no rule for this ref; keep scanning
-        }
-      }
-      di += 1
-    }
-    // defensive completion of the early-exited scan: the loop above stops
-    // once rule 0 matches (bestRuleIdx can't improve), leaving later spans
-    // uninspected. Today that exit implies hasMedia=true (rule 0 only
-    // matches media), making this re-scan unreachable — it exists so the
-    // textonly/generic distinction stays correct if a future registry
-    // change breaks that implication. The native expression needs no
-    // equivalent: its dispatch pass never early-exits.
-    if (!hasMedia && di < n)
-      hasMedia = spans.exists(s => s.kind == "media" && s.media_ref.nonEmpty)
-    val extractor =
-      if (bestRuleIdx != Int.MaxValue) registry.nameAt(bestRuleIdx)
-      else if (hasMedia) Registry.GenericExtractor
-      else Registry.TextOnlyExtractor
-
-    // ---- per-span classification + media variant grouping
-    val out = new ArrayBuffer[OutSpan](n)
-    var i = 0
-    while (i < n) {
-      val s = spans(i)
-      s.kind match {
-        case k if BoilerplateKinds.contains(k) => // drop
-        case "title" =>
-          out += OutSpan("title", s.text, "", 0)
-        case "text" =>
-          val adj = (i > 0 && spans(i - 1).kind == "title") ||
-            (i + 1 < n && spans(i + 1).kind == "title")
-          if (keepText(s.text, adj)) out += OutSpan("text", s.text, "", 0)
-        case "link" =>
-          if (keepLink(s.text)) out += OutSpan("text", s.text, "", 0)
-        case "media" =>
-          // variant group = maximal run of consecutive media spans sharing
-          // the same (rule, identity) group key (qetch content-list of
-          // quality variants, D2). Pick best variant by quality(ext),
-          // tie-break earliest; emit ONE canonical span at the group head.
-          registry.dispatch(s.media_ref) match {
-            case Some((rule, m)) =>
-              val key = registry.groupKey(rule, m)
-              var bestExt = registry.extOf(rule, m)
-              var bestQ = Registry.quality(bestExt)
-              var bestM: Matcher = m
-              var bestRule = rule
-              var j = i + 1
-              var run = true
-              while (run && j < n && spans(j).kind == "media") {
-                registry.dispatch(spans(j).media_ref) match {
-                  case Some((r2, m2)) if registry.groupKey(r2, m2) == key =>
-                    val q2 = Registry.quality(registry.extOf(r2, m2))
-                    if (q2 > bestQ) { bestQ = q2; bestM = m2; bestRule = r2; bestExt = registry.extOf(r2, m2) }
-                    j += 1
-                  case _ => run = false
-                }
-              }
-              out += OutSpan("media", s.text, registry.canonicalize(bestRule, bestM), 0)
-              i = j - 1 // consumed the whole variant run
-            case None =>
-              // unmatched media ref: kept as-is (generic passthrough)
-              if (s.media_ref.nonEmpty) out += OutSpan("media", s.text, s.media_ref, 0)
-          }
-        case _ => // unknown kind: drop
-      }
-      i += 1
-    }
-
-    // renumber offsets dense 0..n-1 in preserved order
-    val renumbered = out.iterator.zipWithIndex
-      .map { case (s, idx) => s.copy(offset = idx) }.toVector
-
-    val conf =
-      if (n == 0) 0.0
-      else renumbered.length.toDouble / n.toDouble
-
-    ExtractedDoc(doc.doc_id, renumbered, extractor, conf, doc.domain, doc.bucket, n)
-  }
-
-  /** Confidence histogram bucket: floor(conf*10) clamped to [0,9]. */
-  def confBucket(conf: Double): Int = math.min(9, math.max(0, (conf * 10).toInt))
 }

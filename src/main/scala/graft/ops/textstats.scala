@@ -221,8 +221,8 @@ object TextStats {
       }
     }
 
-  /** Integer quality score: 4·words + 3·stopwords (the boilerplate
-    * classifier's text-density formula, graft.Classify.textScore). */
+  /** Integer quality score: 4·words + 3·stopwords (a text-density score
+    * over the classifier's stopword list, graft.Classify.Stopwords). */
   def qualityScore(textCol: Column): Column = {
     val stops = graft.Classify.Stopwords.toSeq.sorted.map("'" + _ + "'").mkString(",")
     (lit(4) * size(split(textCol, " ")) +

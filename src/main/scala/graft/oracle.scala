@@ -4,7 +4,9 @@ package graft
   *
   * Independent, deliberately naive re-implementation of the extraction spec
   * — functional style, regex via scala matching, no shared code with
-  * [[Classify]] beyond the spec constants in [[Registry]]. The distributed
+  * [[plans.ExtractExpression]] beyond the spec constants in [[Registry]]
+  * and [[Classify]]; the DuckDB replay in `Queries.classifierCtes` is the
+  * third copy, so keep the three in sync. The distributed
   * pipeline must agree with this span-for-span (kind, text, media_ref,
   * order) on every fixture and generated doc; this preserves the shape of
   * qetch's extractor test strategy (known input → exact expected ordered
@@ -28,8 +30,8 @@ object ReferenceOracle {
   private def words(t: String): List[String] = t.split(" ").filter(_.nonEmpty).toList
 
   def extract(doc: RawDoc): ExtractedDoc = {
-    // null text/media_ref normalize to "" (same contract as Classify and
-    // the native expression)
+    // null text/media_ref normalize to "" (same contract as the
+    // extract_spans expression)
     val spans = doc.spans
       .map(s => RawSpan(s.kind, Option(s.text).getOrElse(""),
         Option(s.media_ref).getOrElse(""), s.offset))

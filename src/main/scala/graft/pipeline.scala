@@ -1,24 +1,27 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The distributed extraction core (SURVEY.md §3.4, §7.3 M1).
   *
-  * One typed `mapPartitions` stage sandwiched between column-algebra
-  * DataFrame stages: the registry (config, not data) is shipped once per
-  * task closure and compiled once per partition; each document flows
-  * through dispatch → classify → media-link exactly as in qetch's
-  * `extract()` (qetch/extractors/_common.py::BaseExtractor.extract), but
-  * over partitions of a Dataset instead of one URL at a time.
+  * One extraction engine: the `extract_spans` Catalyst expression
+  * ([[plans.ExtractExpression]]) with the registry as its argument, so the
+  * batch job, a rule-change backfill and the streams all run the same
+  * codegen'd projection. Each document flows through dispatch → classify →
+  * media-link exactly as in qetch's `extract()`
+  * (qetch/extractors/_common.py::BaseExtractor.extract), but over
+  * partitions of a DataFrame instead of one URL at a time.
   *
   * Scale design:
-  *  - `repartitionByRange(buckets, $"bucket", $"doc_id")` is the single
-  *    Exchange; bucket is the checkpoint/lineage unit (SURVEY.md §2C) and
-  *    doc_id range-ordering keeps partitions balanced (doc_ids are uniform;
+  *  - extraction keeps the input's own splits (no exchange) unless the
+  *    caller asks for `numPartitions`; then
+  *    `repartitionByRange(n, $"bucket", $"doc_id")` is the single Exchange
+  *    — bucket is the checkpoint/lineage unit (SURVEY.md §2C) and doc_id
+  *    range-ordering keeps partitions balanced (doc_ids are uniform;
   *    domain skew never reaches this shuffle key).
-  *  - the iterator is fully streaming: no per-partition buffering beyond the
-  *    current document (spill-safety at 100 TB, SURVEY.md §4.2).
+  *  - the projection is fully streaming: no per-partition buffering beyond
+  *    the current document (spill-safety at 100 TB, SURVEY.md §4.2).
   *  - metrics are DERIVED FROM DATA AT REST, never from accumulators:
   *    Spark only guarantees exactly-once accumulator semantics inside
   *    actions, so task retries / speculative execution would double-count
@@ -28,30 +31,38 @@ import org.apache.spark.sql.functions._
   */
 object ExtractJob {
 
-  /** Pure transform: raw docs → extracted docs (typed mapPartitions path).
-    * `rules` defaults to the built-in registry; [[backfill]] passes the
-    * UPDATED rule set when reprocessing after a registry change (the rule
-    * seq is config-sized — it ships in the task closure and compiles once
-    * per partition exactly like the default). */
+  /** Pure transform: raw docs → extracted docs, range-exchanged into
+    * `numPartitions` by (bucket, doc_id). `rules` defaults to the built-in
+    * registry; a caller replaying a registry change passes the edited set. */
   def transform(
       docs: Dataset[RawDoc],
       numPartitions: Int = DocGen.NumBuckets,
       rules: Seq[ExtractorRule] = Registry.rules): Dataset[ExtractedDoc] = {
     val spark = docs.sparkSession
     import spark.implicits._
+    plans.GraftFunctions.extractColumnar(
+      docs.repartitionByRange(numPartitions, $"bucket", $"doc_id").toDF(), rules)
+      .as[ExtractedDoc]
+  }
 
-    docs
-      .repartitionByRange(numPartitions, $"bucket", $"doc_id")
-      .mapPartitions { it =>
-        val registry = new CompiledRegistry(rules)
-        it.map(doc => Classify.extractDoc(doc, registry))
-      }
+  /** The pending buckets of `docs`, extracted under `rules`: range-exchanged
+    * when the caller asks for `numPartitions > 0`, otherwise over the
+    * input's own splits (which the scan already sized via
+    * maxPartitionBytes — at real scale a bucket spans MANY splits, so a
+    * bucket dir gets several files; compact() merges them later). The
+    * bucket filter prunes directories of a parquet source partitioned by
+    * bucket; on a generated Dataset it is a cheap filter. */
+  private def extractPending(docs: Dataset[RawDoc], pending: Seq[Int],
+      numPartitions: Int, rules: Seq[ExtractorRule]): DataFrame = {
+    val pendingDocs = docs.where(col("bucket").isin(pending: _*))
+    if (numPartitions > 0) transform(pendingDocs, numPartitions, rules).toDF()
+    else plans.GraftFunctions.extractColumnar(pendingDocs.toDF(), rules)
   }
 
   /** Full job: extract `docs` restricted to `pendingBuckets`, write each
     * bucket idempotently (dynamic partition overwrite), derive metrics +
     * watermarks from the committed files in ONE scan, and commit a new
-    * snapshot (with per-bucket file lineage) to the manifest.
+    * snapshot (with per-bucket file lineage and zone maps) to the manifest.
     *
     * Idempotence: rerunning a bucket overwrites exactly that bucket's
     * directory, so a crash between write and commit is safe — the manifest
@@ -59,11 +70,8 @@ object ExtractJob {
     * receive ZERO documents are still committed (rows=0, empty watermark,
     * no files) so a sparse table converges instead of re-running forever.
     *
-    * `native = true` routes extraction through the `extract_spans` Catalyst
-    * expression (plans.ExtractExpression — the fast path, ~1.7×). Both
-    * engines are span-for-span identical (SpanEqualitySpec) and produce the
-    * same table schema (including `spans_in`, the raw input span count that
-    * makes input-side metrics derivable at rest).
+    * `native` is ignored: there is one engine. It stays so existing callers
+    * that pass it keep compiling.
     */
   def run(
       spark: SparkSession,
@@ -73,8 +81,7 @@ object ExtractJob {
       resume: Boolean = true,
       native: Boolean = false,
       numPartitions: Int = 0): Manifest.Snapshot =
-    runGated(spark, docs, tableDir, runId, _ => true, resume, native,
-      numPartitions).get
+    extractRun(spark, docs, tableDir, runId, None, resume, numPartitions).get
 
   /** WRITE-AUDIT-PUBLISH extraction (Iceberg's WAP pattern — the data
     * quality gate a production table needs in front of every publish):
@@ -104,65 +111,69 @@ object ExtractJob {
       runId: String,
       audit: DataFrame => Boolean,
       resume: Boolean = true,
-      native: Boolean = false,
-      numPartitions: Int = 0): Option[Manifest.Snapshot] = {
-    import spark.implicits._
+      numPartitions: Int = 0): Option[Manifest.Snapshot] =
+    extractRun(spark, docs, tableDir, runId, Some(audit), resume, numPartitions)
+
+  /** [[run]] and [[runGated]]: `audit` = None publishes without reading
+    * the written files back. */
+  private def extractRun(
+      spark: SparkSession,
+      docs: Dataset[RawDoc],
+      tableDir: String,
+      runId: String,
+      audit: Option[DataFrame => Boolean],
+      resume: Boolean,
+      numPartitions: Int): Option[Manifest.Snapshot] = {
     val t0 = System.nanoTime()
     val table = new Manifest(tableDir, spark.sessionState.newHadoopConf())
     val completed = if (resume) table.completedBuckets() else Set.empty[Int]
-    val allBuckets = (0 until DocGen.NumBuckets).toSet
-    val pending = (allBuckets -- completed).toSeq.sorted
-
+    val pending = ((0 until DocGen.NumBuckets).toSet -- completed).toSeq.sorted
     if (pending.isEmpty) return Some(table.head().get)
 
-    // partition-pruning filter: with a parquet source partitioned by bucket
-    // this prunes directories; with a generated Dataset it's a cheap filter.
-    // at real scale a bucket spans MANY partitions (numPartitions ≫ buckets
-    // → multiple files per bucket dir; compact() merges them later)
-    val pendingDocs = docs.where($"bucket".isin(pending: _*)).as[RawDoc]
-    // SCALE-ADAPTIVE default: cap the extraction parallelism at the
-    // input's own split count (which the scan already derived from input
-    // size via maxPartitionBytes) — a large input still gets one range
-    // partition per pending bucket exactly as before, while a small
-    // backfill/test slice stops paying 16 fixed-overhead tasks per stage
-    // to process a handful of splits. Callers needing more override via
-    // numPartitions.
-    val parts = if (numPartitions > 0) numPartitions
-      else math.max(1, math.min(pending.length, pendingDocs.rdd.getNumPartitions))
-    val extracted =
-      if (native) plans.GraftFunctions.extractColumnar(pendingDocs.toDF())
-      else transform(pendingDocs, numPartitions = parts).toDF()
-
-    // pre-write listing: dynamic overwrite only replaces directories of
-    // partitions PRESENT in the output, so a pending bucket that receives
-    // zero rows keeps whatever stale files an earlier (crashed/abandoned)
-    // run left there. Lineage must record only files THIS run produced —
-    // the post-write diff below excludes stale leftovers (they become
-    // unreferenced orphans, removable via Manifest.removeOrphans).
-    val preFiles: Map[Int, Set[String]] =
-      pending.map(b => b -> table.listBucketFiles(b).toSet).toMap
-
-    extracted
-      .write.mode("overwrite")
-      // per-write option, NOT session config: a session-wide setting would
-      // silently change overwrite semantics of unrelated writes.
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(s"$tableDir/data")
-
-    // lineage: exactly the files this run wrote per pending bucket —
-    // recorded in the snapshot and used to PLAN the post-write scan,
-    // Iceberg-style, instead of listing the table directory again.
-    val bucketFiles: Map[Int, Seq[String]] =
-      pending.map(b => b -> table.listBucketFiles(b).filterNot(preFiles(b))).toMap
+    // dynamic overwrite replaces exactly the pending buckets' directories
+    val bucketFiles = writeBuckets(table, tableDir, pending,
+      extractPending(docs, pending, numPartitions, Registry.rules)
+        .write.mode("overwrite")
+        // per-write option, NOT session config: a session-wide setting would
+        // silently change overwrite semantics of unrelated writes.
+        .option("partitionOverwriteMode", "dynamic"))
     val newFiles = pending.flatMap(bucketFiles)
 
     // AUDIT GATE: the uncommitted output, planned from this run's files
     // only — on false, return before ANY manifest/metrics mutation (the
     // files are orphans; on throw, the same guarantee holds by ordering)
-    if (newFiles.nonEmpty && !audit(table.readFiles(spark, newFiles)))
+    if (newFiles.nonEmpty &&
+        audit.exists(gate => !gate(table.readFiles(spark, newFiles))))
       return None
+    Some(commitWritten(spark, table, tableDir, runId, t0, bucketFiles))
+  }
 
+  /** Write `extracted` (already given its mode) partitioned by bucket and
+    * return, per pending bucket, exactly the files this write produced.
+    * The pre-write listing matters: dynamic overwrite only replaces
+    * directories of partitions PRESENT in the output, so a pending bucket
+    * that receives zero rows keeps whatever stale files an earlier
+    * (crashed/abandoned) run left there, and an append leaves the replaced
+    * files beside the new ones. Lineage records only this write's files;
+    * leftovers become unreferenced orphans (Manifest.removeOrphans). The
+    * diff is what PLANS the post-write scans, Iceberg-style, instead of
+    * listing the table directory again. */
+  private def writeBuckets(table: Manifest, tableDir: String, pending: Seq[Int],
+      extracted: DataFrameWriter[Row]): Map[Int, Seq[String]] = {
+    val before = pending.map(b => b -> table.listBucketFiles(b).toSet).toMap
+    extracted.partitionBy("bucket").parquet(s"$tableDir/data")
+    pending.map(b => b -> table.listBucketFiles(b).filterNot(before(b))).toMap
+  }
+
+  /** The post-write tail shared by [[run]] and [[backfill]]: derive stats
+    * and zone maps from the freshly written files, commit one snapshot
+    * whose states cover exactly `bucketFiles`' buckets, then append the
+    * metrics rows. */
+  private def commitWritten(spark: SparkSession, table: Manifest,
+      tableDir: String, runId: String, t0: Long,
+      bucketFiles: Map[Int, Seq[String]]): Manifest.Snapshot = {
+    val buckets = bucketFiles.keys.toSeq.sorted
+    val newFiles = buckets.flatMap(bucketFiles)
     // ONE scan of the data at rest → metrics side table + watermark — run
     // CONCURRENTLY with the zone-map footer pass (guide §2.6): the two
     // post-write jobs read disjoint byte ranges of the same fresh files
@@ -178,7 +189,7 @@ object ExtractJob {
       .groupBy(s => bucketFiles.collectFirst {
         case (b, fs) if fs.contains(s.file) => b }.get)
 
-    val states = pending.map { b =>
+    val states = buckets.map { b =>
       val s = stats.getOrElse(b, BucketStat(0L, 0L, 0L, Nil, ""))
       Manifest.BucketState(b, s.docs, s.wm, bucketFiles(b),
         zoneMaps.getOrElse(b, Nil))
@@ -190,8 +201,8 @@ object ExtractJob {
     // rows describing an uncommitted snapshot). Post-commit, a snapshot id
     // appears at most once in the side table; the only crash artifact is a
     // MISSING metrics batch, which is re-derivable from data at rest.
-    writeMetrics(spark, tableDir, runId, System.nanoTime() - t0, pending, stats)
-    Some(snap)
+    writeMetrics(spark, tableDir, runId, System.nanoTime() - t0, buckets, stats)
+    snap
   }
 
   /** Selective RULE-CHANGE backfill — the reprocessing economics operator.
@@ -214,7 +225,7 @@ object ExtractJob {
     *    through to generic passthrough), matching the rule's NEW pattern.
     *
     * ONE scan of the committed table — `exists(spans, media_ref rlike …)`
-    * over the two alternations — yields the affected buckets; only those
+    * OR-ed over those patterns — yields the affected buckets; only those
     * are re-extracted (partition-pruned read of the raw input) under
     * `newRules`, and only their states move in the commit.
     *
@@ -265,11 +276,13 @@ object ExtractJob {
     if (removed.isEmpty && added.isEmpty && edited.isEmpty) return snap
 
     // affected predicate over committed refs: old-canonical shapes of
-    // removed/edited rules + new raw patterns of added/edited rules
+    // removed/edited rules + new raw patterns of added/edited rules, one
+    // rlike each (the patterns share group names, so one alternation of
+    // them would not compile)
     val oldShapes = (removed ++ edited).map(r => canonicalShapeRegex(r.canonical))
     val newPats = (added ++ edited.map(r => newByName(r.name))).map(_.pattern)
-    val refRegex = (oldShapes ++ newPats).map(p => s"(?:$p)").mkString("|")
-    val hit = exists(col("spans"), s => s.getField("media_ref").rlike(refRegex))
+    val hit = exists(col("spans"), s =>
+      (oldShapes ++ newPats).map(p => s.getField("media_ref").rlike(p)).reduce(_ || _))
 
     // affected buckets from data at rest: spans + bucket columns only,
     // config-sized result (bounded by the bucket count, never table width)
@@ -279,30 +292,9 @@ object ExtractJob {
       .collect().map(_.getInt(0)).toSeq.sorted
     if (pending.isEmpty) return snap
 
-    val pendingDocs = docs.where($"bucket".isin(pending: _*)).as[RawDoc]
-    // same scale-adaptive default as runGated: capped by the input's split count
-    val parts = if (numPartitions > 0) numPartitions
-      else math.max(1, math.min(pending.length, pendingDocs.rdd.getNumPartitions))
-    val extracted = transform(pendingDocs, numPartitions = parts, rules = newRules)
-
-    val before: Map[Int, Set[String]] =
-      pending.map(b => b -> table.listBucketFiles(b).toSet).toMap
-    extracted.toDF()
-      .write.mode("append")
-      .partitionBy("bucket")
-      .parquet(s"$tableDir/data")
-    val bucketFiles: Map[Int, Seq[String]] =
-      pending.map(b => b -> table.listBucketFiles(b).filterNot(before(b))).toMap
-    val newFiles = pending.flatMap(bucketFiles)
-
-    val stats = scanStats(spark, tableDir, newFiles)
-    val states = pending.map { b =>
-      val s = stats.getOrElse(b, BucketStat(0L, 0L, 0L, Nil, ""))
-      Manifest.BucketState(b, s.docs, s.wm, bucketFiles(b))
-    }
-    val out = table.commit(runId, states)
-    writeMetrics(spark, tableDir, runId, System.nanoTime() - t0, pending, stats)
-    out
+    val bucketFiles = writeBuckets(table, tableDir, pending,
+      extractPending(docs, pending, numPartitions, newRules).write.mode("append"))
+    commitWritten(spark, table, tableDir, runId, t0, bucketFiles)
   }
 
   /** Regex matching every ref a canonical template can produce: literal

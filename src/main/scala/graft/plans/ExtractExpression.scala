@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.Registry
+import graft.{CompiledRegistry, ExtractorRule, Registry}
 import java.util.regex.Matcher
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -10,51 +10,60 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `extract_spans(spans)` — the extraction classifier as a native Catalyst
-  * expression (SURVEY.md §7.6, promoted from "optional" for scale reasons).
+  * expression (SURVEY.md §7.6), and the ONLY extraction engine: batch,
+  * backfill, streams and the corpus pipelines all run it.
   *
-  * Why this exists: the typed `mapPartitions` path deserializes every doc
-  * into case classes (RawDoc/RawSpan/OutSpan…), ~12 heap objects per span.
-  * At 32 threads that allocation rate causes constant young-GC safepoints;
-  * on this sandbox's preemptible vCPUs each safepoint can convoy, and at
-  * 100 TB it is pure overhead. This expression evaluates directly over
-  * Tungsten rows: input UTF8String/ArrayData are READ IN PLACE, kept span
-  * text is re-emitted as the same UTF8String reference (zero copy), word/
-  * stopword counting scans UTF-8 bytes without materializing Strings, and
-  * only matched media refs ever allocate (regex needs a String).
+  * It evaluates directly over Tungsten rows: input UTF8String/ArrayData are
+  * READ IN PLACE, kept span text is re-emitted as the same UTF8String
+  * reference (zero copy), word/stopword counting scans UTF-8 bytes without
+  * materializing Strings, and only matched media refs ever allocate (regex
+  * needs a String). An object-per-span path (case classes per doc) drives
+  * constant young-GC safepoints at 32 threads.
   *
-  * Semantics are EXACTLY graft.Classify.extractDoc (asserted span-for-span
-  * against ReferenceOracle in SpanEqualitySpec); keep the three in sync.
+  * `rules` is the registry the expression dispatches on (first match wins);
+  * it is part of the expression's identity, so two rule sets in one plan
+  * are two different columns. The expression owns one [[CompiledRegistry]]
+  * — patterns, needles and UTF-8 names compile once per task.
+  *
+  * Semantics are asserted span-for-span against the independent
+  * [[graft.ReferenceOracle]] (SpanEqualitySpec) and the DuckDB replay in
+  * `Queries.classifierCtes`; keep the three in sync.
   *
   * Returns struct(spans: array<struct<kind,text,media_ref,offset:int>>,
   * extractor: string, confidence: double).
   */
-case class ExtractExpression(child: Expression)
+case class ExtractExpression(child: Expression, rules: Seq[ExtractorRule] = Registry.rules)
     extends UnaryExpression {
+
+  @transient private lazy val registry = new CompiledRegistry(rules)
 
   override def dataType: DataType = ExtractExpression.outType
   // a null spans array yields a null result (default nullSafeEval contract)
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "extract_spans"
+  // plan strings show the input only, not every rule's regex
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 
-  override def nullSafeEval(spansRaw: Any): Any = {
-    val arr = spansRaw.asInstanceOf[ArrayData]
-    ExtractExpression.extract(arr)
-  }
+  override def nullSafeEval(spansRaw: Any): Any =
+    ExtractExpression.extract(spansRaw.asInstanceOf[ArrayData], registry)
 
-  /** Real codegen (no CodegenFallback): emit a direct static call into the
-    * JIT-compiled classifier. The heavy per-doc work stays in one JVM
-    * method (the standard pattern for complex expressions, cf. Spark's
-    * regexp expressions calling into helper objects); what codegen buys is
-    * the removal of the fallback boundary — the enclosing Project stays
-    * inside WholeStageCodegen, with no interpreted-projection / boxing
-    * bridge per row (measured 1.16–1.22× end-to-end in the steal-free
-    * 2–8-core zone, BENCH/BASELINE.md "doGenCode delta"). */
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  /** Real codegen (no CodegenFallback): a direct call into the
+    * JIT-compiled classifier with this expression's registry as a
+    * reference object. The heavy per-doc work stays in one JVM method (the
+    * standard pattern for complex expressions, cf. Spark's regexp
+    * expressions calling into helper objects); what codegen buys is the
+    * removal of the fallback boundary — the enclosing Project stays inside
+    * WholeStageCodegen, with no interpreted-projection / boxing bridge per
+    * row (measured 1.16–1.22× end-to-end in the steal-free 2–8-core zone,
+    * BENCH/BASELINE.md "doGenCode delta"). */
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val reg = ctx.addReferenceObj("registry", registry)
     nullSafeCodeGen(ctx, ev, childVar =>
-      s"${ev.value} = graft.plans.ExtractExpression$$.MODULE$$.extract($childVar);")
+      s"${ev.value} = graft.plans.ExtractExpression.extract($childVar, $reg);")
+  }
 }
 
 object ExtractExpression {
@@ -82,7 +91,6 @@ object ExtractExpression {
   private val EMPTY = UTF8String.fromString("")
   private val X_GENERIC = UTF8String.fromString(Registry.GenericExtractor)
   private val X_TEXTONLY = UTF8String.fromString(Registry.TextOnlyExtractor)
-  private val ruleNamesU8 = Registry.rules.map(r => UTF8String.fromString(r.name)).toArray
 
   /** Stopword lookup without String allocation: stopwords are short ASCII —
     * pack up to 8 bytes into a Long key. (All Classify.Stopwords are ≤ 4
@@ -132,24 +140,10 @@ object ExtractExpression {
     (words.toLong << 32) | (stops.toLong & 0xffffffffL)
   }
 
-  private val compiled = Registry.rules.map(r => java.util.regex.Pattern.compile(r.pattern)).toArray
-
-  /** Shared compiled registry — one instance per JVM (was per-row: regex
-    * recompilation per document, a silent 2× tax found via bench). */
-  private val sharedReg = graft.CompiledRegistry.default
-
-  /** Per-rule guaranteed-literal needle (CompiledRegistry.literalNeedle) as
-    * UTF8String bytes: a media ref that does not CONTAIN the needle cannot
-    * match the rule, so the regex (and the UTF8String→String copy it needs)
-    * is skipped entirely. Unmatched-host refs — the common case in an open
-    * crawl — never allocate. null = no safe needle, always run the regex. */
-  private val needles: Array[UTF8String] = Registry.rules.map { r =>
-    val n = graft.CompiledRegistry.literalNeedle(r.pattern)
-    if (n.isEmpty) null else UTF8String.fromString(n)
-  }.toArray
-
-  def extract(arr: ArrayData): InternalRow = {
+  /** Extract one document's spans under the compiled registry `reg`. */
+  def extract(arr: ArrayData, reg: CompiledRegistry): InternalRow = {
     val n = arr.numElements()
+    val patterns = reg.patterns; val needles = reg.needles
 
     // ---- gather (kind-code, row) sorted by offset. kind codes:
     // 0 title, 1 text, 2 link, 3 media, 4 boilerplate, 5 unknown
@@ -181,8 +175,8 @@ object ExtractExpression {
     i = 0
     while (i < n) {
       val st = arr.getStruct(order(i), 4)
-      // null struct / null kind → unknown (dropped), matching the typed path
-      // never seeing such spans in valid data
+      // null struct / null kind → unknown (dropped); valid data never
+      // carries such spans
       kinds(i) =
         if (st == null || st.isNullAt(0)) 5 else kindCode(st.getUTF8String(0))
       i += 1
@@ -208,13 +202,14 @@ object ExtractExpression {
         val ref = u8(span(i), 2)
         if (ref.numBytes() > 0) {
           hasMedia = true
+          // first match in registry order (CompiledRegistry.dispatch, inline)
           var found = -1
           var refStr: String = null
           var r = 0
-          while (found < 0 && r < compiled.length) {
+          while (found < 0 && r < patterns.length) {
             if (needles(r) == null || ref.contains(needles(r))) {
               if (refStr == null) refStr = ref.toString
-              val m = compiled(r).matcher(refStr)
+              val m = patterns(r).matcher(refStr)
               if (m.matches()) { found = r; matchers(i) = m }
             }
             r += 1
@@ -226,7 +221,7 @@ object ExtractExpression {
       i += 1
     }
     val extractor =
-      if (bestRule != Int.MaxValue) ruleNamesU8(bestRule)
+      if (bestRule != Int.MaxValue) reg.namesU8(bestRule)
       else if (hasMedia) X_GENERIC
       else X_TEXTONLY
 
@@ -235,7 +230,6 @@ object ExtractExpression {
     def emit(kind: UTF8String, text: UTF8String, ref: UTF8String): Unit =
       out.add(new GenericInternalRow(Array[Any](kind, text, ref, out.size())))
 
-    val reg = sharedReg
     i = 0
     while (i < n) {
       val s = span(i)
@@ -256,13 +250,13 @@ object ExtractExpression {
           if (ruleIdx(i) >= 0) {
             // variant run: consecutive media spans with the same group key
             // (rule/matcher reused from the dispatch pass — no re-matching)
-            val rule = Registry.rules(ruleIdx(i)); val m = matchers(i)
+            val rule = reg.rules(ruleIdx(i)); val m = matchers(i)
             val key = reg.groupKey(rule, m)
             var bestQ = Registry.quality(reg.extOf(rule, m))
             var bestRuleR = rule; var bestM = m
             var j = i + 1; var run = true
             while (run && j < n && kinds(j) == 3 && ruleIdx(j) >= 0) {
-              val r2 = Registry.rules(ruleIdx(j)); val m2 = matchers(j)
+              val r2 = reg.rules(ruleIdx(j)); val m2 = matchers(j)
               if (reg.groupKey(r2, m2) == key) {
                 val q2 = Registry.quality(reg.extOf(r2, m2))
                 if (q2 > bestQ) { bestQ = q2; bestM = m2; bestRuleR = r2 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.util.regex.{Matcher, Pattern}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Extractor registry: ordered first-match URL-pattern dispatch.
   *
@@ -9,8 +10,8 @@ import java.util.regex.{Matcher, Pattern}
   * (SURVEY.md §2A O1–O3). qetch keeps a module-level list of extractor
   * classes and returns the FIRST whose regex handles match the URL; dispatch
   * is ordered and deterministic. Here the registry is a small immutable
-  * `Seq[ExtractorRule]` built on the driver and broadcast (it is config, not
-  * data); patterns are compiled once per partition via [[CompiledRegistry]].
+  * `Seq[ExtractorRule]` shipped with the plan (it is config, not data);
+  * patterns are compiled once per task via [[CompiledRegistry]].
   *
   * Patterns use named groups exactly like qetch's handles
   * (e.g. `(?P<id>...)` → Java `(?<id>...)`).
@@ -69,42 +70,47 @@ object Registry {
   def quality(ext: String): Int = qualityOf.getOrElse(ext, 10)
 }
 
-/** Per-partition compiled form of the registry: patterns compiled once,
-  * reused across every doc in the partition (qetch compiles handles at class
-  * definition time; our unit of reuse is the Spark partition). */
-final class CompiledRegistry(rules: Seq[ExtractorRule]) extends Serializable {
+/** Per-task compiled form of a rule set: patterns, literal needles and
+  * UTF-8 rule names are built once and reused across every doc of the task
+  * (qetch compiles handles at class definition time; our unit of reuse is
+  * the Spark task). `plans.ExtractExpression` owns one per rule set, so
+  * the built-in registry and an edited one run through the same engine. */
+final class CompiledRegistry(ruleSet: Seq[ExtractorRule]) extends Serializable {
 
-  @transient private lazy val compiled: Seq[(ExtractorRule, Pattern)] =
-    rules.map(r => (r, Pattern.compile(r.pattern)))
+  /** The rules in dispatch order (index = registry position). */
+  val rules: IndexedSeq[ExtractorRule] = ruleSet.toIndexedSeq
 
-  /** Per-rule guaranteed-literal needle ("" = none): a ref not containing
-    * it cannot match, so the regex is skipped (CompiledRegistry.literalNeedle). */
-  @transient private lazy val needles: Seq[String] =
-    rules.map(r => CompiledRegistry.literalNeedle(r.pattern))
+  /** Compiled patterns, indexed like [[rules]]. */
+  @transient private[graft] lazy val patterns: Array[Pattern] =
+    rules.map(r => Pattern.compile(r.pattern)).toArray
 
-  @transient private lazy val idxByName: Map[String, Int] =
-    rules.zipWithIndex.map { case (r, i) => r.name -> i }.toMap
+  /** Per-rule guaranteed-literal needle as UTF-8 bytes (null = none): a ref
+    * that does not CONTAIN it cannot match, so the regex — and the
+    * UTF8String→String copy it needs — is skipped
+    * ([[CompiledRegistry.literalNeedle]]). Unmatched-host refs, the common
+    * case in an open crawl, never allocate. */
+  @transient private[graft] lazy val needles: Array[UTF8String] = rules.map { r =>
+    val n = CompiledRegistry.literalNeedle(r.pattern)
+    if (n.isEmpty) null else UTF8String.fromString(n)
+  }.toArray
 
-  /** Registration-order index of a rule in THIS registry — dispatch
-    * priority must be resolved against the compiled rule set, never the
-    * global [[Registry.rules]] (a backfill runs with an EDITED set). */
-  def indexOf(rule: ExtractorRule): Int = idxByName(rule.name)
+  /** Rule names as UTF-8, indexed like [[rules]] (the extractor label). */
+  @transient lazy val namesU8: Array[UTF8String] =
+    rules.map(r => UTF8String.fromString(r.name)).toArray
 
-  /** Rule name at a registration-order index of THIS registry. */
-  def nameAt(idx: Int): String = rules(idx).name
-
-  /** First rule (in registry order) matching the ref, with its Matcher —
-    * qetch get_handle analog. Needle precheck skips regex work for refs
-    * that cannot match (most of an open crawl). */
+  /** First rule in registry order matching `ref`, with its Matcher — qetch
+    * get_handle analog. `plans.ExtractExpression` runs the same loop inline
+    * over UTF-8 refs: as a call per media span it measured ~4% slower
+    * (40k generated docs, single thread, 4-vCPU host). */
   def dispatch(ref: String): Option[(ExtractorRule, Matcher)] = {
-    var i = 0
-    while (i < compiled.length) {
-      val needle = needles(i)
-      if (needle.isEmpty || ref.contains(needle)) {
-        val m = compiled(i)._2.matcher(ref)
-        if (m.matches()) return Some((compiled(i)._1, m))
+    val u8 = UTF8String.fromString(ref)
+    var r = 0
+    while (r < patterns.length) {
+      if (needles(r) == null || u8.contains(needles(r))) {
+        val m = patterns(r).matcher(ref)
+        if (m.matches()) return Some((rules(r), m))
       }
-      i += 1
+      r += 1
     }
     None
   }

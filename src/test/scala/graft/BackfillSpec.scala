@@ -153,4 +153,40 @@ class BackfillSpec extends AnyFunSuite {
     assert(docView(m.readData(spark)) === expectedView(docs, rulesD))
     assert(m.readData(spark).where($"extractor" === "cdnfile").count() > 0)
   }
+
+  test("an EDIT of two rules in one call (gfyclip + chanboard canonicals) matches a full re-run") {
+    val docs = DocGen.generate(spark, 400, 8)
+    val dir = freshDir()
+    ExtractJob.run(spark, docs, dir, "base", resume = false)
+    val m = new Manifest(dir)
+
+    // both rules carry an (?<ext>…) group: the footprint predicate must not
+    // join their patterns into one regex
+    val rulesE = Registry.rules.map {
+      case r if r.name == "gfyclip" => r.copy(canonical = "https://gfyclip.test/${id}?rev=2")
+      case r if r.name == "chanboard" => r.copy(canonical = "chanboard://${board}/${tim}.${ext}")
+      case r => r
+    }
+    ExtractJob.backfill(spark, docs, dir, "bf-edit2", newRules = rulesE)
+
+    val got = docView(m.readData(spark))
+    assert(got === expectedView(docs, rulesE))
+    assert(got.values.exists(_._2.exists(_._3.contains("?rev=2"))))
+    assert(got.values.exists(_._2.exists(_._3.startsWith("chanboard://"))))
+  }
+
+  test("backfill records zone maps: every file in HEAD has a FileStat") {
+    val docs = DocGen.generate(spark, 400, 8)
+    val dir = freshDir()
+    ExtractJob.run(spark, docs, dir, "base", resume = false)
+    val rulesC = Registry.rules.map(r =>
+      if (r.name == "gfyclip") r.copy(canonical = "https://gfyclip.test/${id}?rev=2") else r)
+    val before = new Manifest(dir).head().get
+    val snap = ExtractJob.backfill(spark, docs, dir, "bf-stats", newRules = rulesC)
+    assert(snap.id > before.id, "the edit must rewrite some bucket")
+    snap.buckets.foreach { b =>
+      assert(b.stats.map(_.file).toSet == b.files.toSet,
+        s"bucket ${b.bucket}: files without a zone map: ${b.files.filterNot(b.stats.map(_.file).toSet)}")
+    }
+  }
 }

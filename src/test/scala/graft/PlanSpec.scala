@@ -80,6 +80,18 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("*(1)") || p.contains("WholeStageCodegen"), p.take(600))
   }
 
+  test("ExtractJob.transform plans no object stage, and extract_spans is codegen'd") {
+    import spark.implicits._
+    val ds = ExtractJob.transform(spark.createDataset((0L until 100L).map(DocGen.docFor)), 4)
+    ds.collect()
+    val p = ds.queryExecution.executedPlan.toString
+    assert(!p.contains("DeserializeToObject") && !p.contains("MapPartitions"),
+      s"transform must not leave the row format:\n$p")
+    // the Project holding extract_spans sits inside a codegen span "*(n)"
+    assert(p.linesIterator.exists(l => l.contains("extract_spans") && l.matches(".*\\*\\(\\d+\\) Project.*")),
+      s"extract_spans must be whole-stage codegen'd:\n$p")
+  }
+
   test("extraction has exactly one exchange (the bucket range partitioning)") {
     import spark.implicits._
     val docs = spark.createDataset((0L until 100L).map(DocGen.docFor))

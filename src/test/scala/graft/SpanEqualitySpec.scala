@@ -23,8 +23,11 @@ class SpanEqualitySpec extends AnyFunSuite {
     val failures = docs.flatMap { d =>
       val exp = ReferenceOracle.extract(d)
       val act = actual(d.doc_id)
-      if (seq(act) != seq(exp) || act.extractor != exp.extractor)
-        Some(s"${d.doc_id}: expected ${seq(exp)} [${exp.extractor}], got ${seq(act)} [${act.extractor}]")
+      if (seq(act) != seq(exp) || act.extractor != exp.extractor ||
+          act.confidence != exp.confidence ||
+          act.spans.map(_.offset) != act.spans.indices)
+        Some(s"${d.doc_id}: expected ${seq(exp)} [${exp.extractor}, ${exp.confidence}], " +
+          s"got ${act.spans} [${act.extractor}, ${act.confidence}]")
       else None
     }
     assert(failures.isEmpty, failures.mkString("\n"))
@@ -42,23 +45,6 @@ class SpanEqualitySpec extends AnyFunSuite {
     }
   }
 
-  private def runColumnar(docs: Seq[RawDoc]): Map[String, ExtractedDoc] =
-    plans.GraftFunctions.extractColumnar(spark.createDataset(docs).toDF())
-      .as[ExtractedDoc].collect().map(d => d.doc_id -> d).toMap
-
-  test("columnar extract_spans expression == oracle on fixtures + 2000 generated docs") {
-    val docs = DocGen.fixtures ++ (0L until 2000L).map(DocGen.docFor)
-    val actual = runColumnar(docs)
-    docs.foreach { d =>
-      val exp = ReferenceOracle.extract(d)
-      val act = actual(d.doc_id)
-      assert(seq(act) == seq(exp), s"span mismatch for ${d.doc_id}")
-      assert(act.extractor == exp.extractor, s"extractor mismatch for ${d.doc_id}")
-      assert(act.confidence == exp.confidence, s"confidence mismatch for ${d.doc_id}")
-      assert(act.spans.map(_.offset) == act.spans.indices.map(identity))
-    }
-  }
-
   test("extract_spans is callable from SQL after extension registration") {
     plans.GraftFunctions.register(spark)
     spark.createDataset(DocGen.fixtures).toDF().createOrReplaceTempView("__fx")
@@ -67,21 +53,52 @@ class SpanEqualitySpec extends AnyFunSuite {
     assert(n == DocGen.fixtures.size)
   }
 
-  test("null text/media_ref normalize to empty in all three implementations") {
-    // foreign parquet can carry nulls the generator never produces; typed,
-    // native and oracle must agree (null → "")
+  test("null text/media_ref normalize to empty in the engine and the oracle") {
+    // foreign parquet can carry nulls the generator never produces; the
+    // engine and the oracle must agree (null → "")
     val doc = RawDoc("n0000000001", Vector(
       RawSpan("title", null, null, 0),
       RawSpan("text", "the table scan joins the fast row", null, 1),
       RawSpan("media", null, "https://media.gfyclip.test/NullTest.mp4", 2),
       RawSpan("media", null, null, 3)), "src0", DocGen.bucketOf("n0000000001"))
-    val typed = Classify.extractDoc(doc, CompiledRegistry.default)
     val oracle = ReferenceOracle.extract(doc)
-    val native = runColumnar(Seq(doc))(doc.doc_id)
-    assert(seq(typed) == seq(oracle), s"typed=${seq(typed)} oracle=${seq(oracle)}")
-    assert(seq(native) == seq(oracle), s"native=${seq(native)} oracle=${seq(oracle)}")
-    assert(typed.spans.map(_.kind) == Seq("title", "text", "media"))
-    assert(typed.spans.forall(s => s.text != null && s.media_ref != null))
+    val got = runPipeline(Seq(doc))(doc.doc_id)
+    assert(seq(got) == seq(oracle), s"engine=${seq(got)} oracle=${seq(oracle)}")
+    assert(got.spans.map(_.kind) == Seq("title", "text", "media"))
+    assert(got.spans.forall(s => s.text != null && s.media_ref != null))
+  }
+
+  test("an edited registry runs through the same engine: gfyclip canonical with ?rev=2 == oracle + suffix") {
+    val rev = "?rev=2"
+    val rules = Registry.rules.map(r =>
+      if (r.name == "gfyclip") r.copy(canonical = r.canonical + rev) else r)
+    val docs = DocGen.fixtures ++ (0L until 2000L).map(DocGen.docFor)
+    val actual = ExtractJob.transform(spark.createDataset(docs), 4, rules)
+      .collect().map(d => d.doc_id -> d).toMap
+    var edited = 0
+    docs.foreach { d =>
+      val exp = ReferenceOracle.extract(d)
+      val expSeq = seq(exp).map { case (k, t, r) =>
+        (k, t, if (r.startsWith("https://gfyclip.test/")) r + rev else r)
+      }
+      val act = actual(d.doc_id)
+      assert(seq(act) == expSeq, s"span mismatch for ${d.doc_id}")
+      assert(act.extractor == exp.extractor, s"extractor mismatch for ${d.doc_id}")
+      edited += act.spans.count(_.media_ref.endsWith(rev))
+    }
+    assert(edited > 0, "the edited canonical must show up")
+  }
+
+  test("two rule sets in one select stay two columns (no merge of the expressions)") {
+    val rules = Registry.rules.map(r =>
+      if (r.name == "gfyclip") r.copy(canonical = r.canonical + "?rev=2") else r)
+    def refs(rs: Seq[ExtractorRule]) =
+      plans.GraftFunctions.extractSpans($"spans", rs).getField("spans").getField("media_ref")
+    val row = spark.createDataset(Seq(DocGen.fixtures.find(_.doc_id == "f0000000006").get))
+      .select(refs(Registry.rules).as("a"), refs(rules).as("b"))
+      .as[(Seq[String], Seq[String])].head()
+    assert(row._1.filter(_.nonEmpty) == Seq("https://gfyclip.test/AbcDef"))
+    assert(row._2.filter(_.nonEmpty) == Seq("https://gfyclip.test/AbcDef?rev=2"))
   }
 
   test("offsets are dense 0..n-1 and strictly increasing") {

@@ -43,28 +43,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("native extract_spans runs unchanged under incremental execution (stream == oracle)") {
-    val in = Files.createTempDirectory("graft_nstream_in_").toString
-    val out = Files.createTempDirectory("graft_nstream_out_").toString
-    val ckpt = Files.createTempDirectory("graft_nstream_ckpt_").toString
-    val schemaFrom = spark.createDataset(Seq(DocGen.docFor(0L))).toDF()
-    spark.createDataset((0L until 150L).map(DocGen.docFor)).toDF()
-      .write.mode("append").parquet(in)
-    val q = streaming.EventStream.extractStreamNative(spark, in, schemaFrom)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val byId = spark.read.parquet(out).as[ExtractedDoc].collect().map(d => d.doc_id -> d).toMap
-    assert(byId.size == 150)
-    (0L until 150L).map(DocGen.docFor).foreach { d =>
-      val exp = ReferenceOracle.extract(d)
-      assert(byId(d.doc_id).spans.map(s => (s.kind, s.text, s.media_ref)) ==
-        exp.spans.map(s => (s.kind, s.text, s.media_ref)), s"mismatch ${d.doc_id}")
-    }
-  }
-
   test("flatMapGroupsWithState streaming dedup keeps the first payload per key across batches") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
